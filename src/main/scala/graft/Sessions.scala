@@ -57,4 +57,27 @@ object Sessions {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A child of `spark` (`newSession()`: same SparkContext, fresh SQL conf
+    * and catalog) whose jobs run on the executor's shared classloader.
+    *
+    * Spark 4.1 keys its generated-code cache on (classloader, code), and
+    * while `spark.sql.artifact.isolation.enabled` is at its default `true`
+    * the executor builds one classloader per session UUID. A fresh child
+    * per MR job or per streaming drain therefore recompiled every
+    * generated class on every call: 9 classes per warm word-count job,
+    * 25 per warm q82 drain, identical bodies each time. graft adds no
+    * session artifacts (jars, files, classes), so isolation buys nothing.
+    * The conf must be set before the child's first execution: the
+    * session's artifact state is computed once, lazily.
+    *
+    * The fix sits at the fork, not in [[local]]: callers that build their
+    * own `SparkSession` (`MrDemo`, library users) reach the same forks.
+    * Every graft-internal `newSession()` goes through here.
+    */
+  def child(spark: SparkSession): SparkSession = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    ss
+  }
 }

@@ -61,13 +61,13 @@ object Engine {
     transformLines(scoped.read.textFile(spec.inputFiles: _*), job, spec.nOutputFiles)
   }
 
-  /** `newSession()` starts from DEFAULT confs, which would silently drop
-    * whatever the caller tuned at runtime (AQE flags, session timezone, …)
-    * — so the caller's runtime SQL confs are copied over before the
-    * per-job override is applied. Read-only entries are skipped.
+  /** A [[graft.Sessions.child]] carrying the caller's runtime SQL confs
+    * (a child starts from DEFAULT confs, which would silently drop AQE
+    * flags, session timezone, …) before the per-job override is applied.
+    * Read-only entries are skipped.
     */
   private def scopedSession(spark: SparkSession): SparkSession = {
-    val scoped = spark.newSession()
+    val scoped = graft.Sessions.child(spark)
     spark.conf.getAll.foreach { case (k, v) =>
       try scoped.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException => () } // static/read-only conf

@@ -83,20 +83,7 @@ object Events {
     */
   val StreamStatePartitions = 8
 
-  /** Runs `build(session)` as a drained streaming query on a FRESH
-    * child session (shared SparkContext/catalog-less temp views): the
-    * memory sink's view registers in the child catalog, so concurrent or
-    * repeated invocations can never collide on the query name or read a
-    * replaced view — the child (and its view) is unreachable once this
-    * returns. The child's shuffle partitions are lowered to
-    * [[StreamStatePartitions]] (state-store instances track shuffle
-    * partitions; see above) without touching the caller's session. The
-    * small final aggregate `finish(view)` is collected and returned as a
-    * LOCAL relation on the CALLER's session — the returned frame is
-    * immutable and independent of any later invocation (the r7 fixed-name
-    * views silently re-read the NEWEST run's data after replacement).
-    */
-  /** Fresh child session configured for a streaming drain: shuffle
+  /** A [[graft.Sessions.child]] configured for a streaming drain: shuffle
     * partitions lowered to [[StreamStatePartitions]] (state stores track
     * shuffle partitions), and — for EPHEMERAL checkpoints only —
     * Spark 4.1's per-checkpoint-file checksum sidecars off. r18 (VERDICT
@@ -113,7 +100,7 @@ object Events {
     */
   private def drainSession(
       spark: SparkSession, durableCheckpoint: Boolean = false): SparkSession = {
-    val ss = spark.newSession()
+    val ss = graft.Sessions.child(spark)
     ss.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions)
     if (!durableCheckpoint)
       ss.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
@@ -150,6 +137,16 @@ object Events {
     if (sys.env.contains("SPARK_GRAFT_DRAIN_PROBE"))
       q.recentProgress.foreach(p => System.err.println("DRAINPROGRESS " + p.json))
 
+  /** Runs `build(session)` as a drained streaming query on a
+    * [[drainSession]]: the memory sink's view registers in the child
+    * catalog, so concurrent or repeated invocations can never collide on
+    * the query name or read a replaced view, and the caller's session is
+    * untouched. The small final aggregate `finish(view)` is collected and
+    * returned as a LOCAL relation on the CALLER's session — the returned
+    * frame is immutable and independent of any later invocation (the r7
+    * fixed-name views silently re-read the NEWEST run's data after
+    * replacement).
+    */
   private def drainToLocal(
       spark: SparkSession,
       name: String,

@@ -237,7 +237,7 @@ object ScalingSmoke {
     // spill files, and record bytes + answer parity in the artifact.
     // SpillSuite is the per-commit unit twin at sf0.001.
     val spillGate = {
-      val ss = spark.newSession()
+      val ss = graft.Sessions.child(spark)
       ss.conf.set("spark.sql.adaptive.enabled", "false")
       ss.conf.set("spark.sql.TungstenAggregate.testFallbackStartsAt", "10000, 20000")
       val df = graft.pipeline.Dedup.ngramJaccard(ss, sfDir)

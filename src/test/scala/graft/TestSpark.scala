@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole forked test JVM —
@@ -7,4 +8,13 @@ import org.apache.spark.sql.SparkSession
   */
 object TestSpark {
   lazy val spark: SparkSession = Sessions.local("local[4]", 8)
+
+  /** Generated classes Janino compiled while `f` ran. The counter is
+    * JVM-wide; suites run one after another in the forked test JVM.
+    */
+  def classesCompiled(f: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
 }

@@ -6,17 +6,17 @@ import graft.TestSpark
 import graft.jobs.WordCount
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Golden end-to-end test of SURVEY.md §7.2: word count over the reference's
-  * own fixtures with the reference's output contract (R files `output_<i>`,
-  * per-file key-sorted, disjoint keys, correct totals). The oracle is an
+/** Golden end-to-end test of SURVEY.md §7.2: word count over the
+  * reference-demo stand-in fixture ([[MrFixture]]) with the reference's
+  * output contract (R files `output_<i>`, per-file key-sorted, disjoint
+  * keys, correct totals). The oracle is an
   * independently computed in-memory frequency table with *intended*
   * semantics (SURVEY.md §2.5 — the reference binary itself has a
   * value-corruption bug we must not replicate).
   */
 class EngineWordCountSuite extends AnyFunSuite {
 
-  private val inputs =
-    Seq("/root/reference/test/input1.txt", "/root/reference/test/input2.txt")
+  private val inputs = MrFixture.inputs
 
   private def goldenCounts(): Map[String, Long] = {
     val counts = scala.collection.mutable.HashMap.empty[String, Long]
@@ -108,6 +108,17 @@ class EngineWordCountSuite extends AnyFunSuite {
     assert(files == Set("output_0", "output_1", "output_2"), "stale output files survived a re-run")
     val pairs = (0 until 3).flatMap(i => Files.readAllLines(outDir.resolve(s"output_$i")).asScala)
     assert(pairs.sorted == Seq("extra, 1", "word, 1"))
+  }
+
+  test("a warm re-run of the same job compiles no generated classes") {
+    import TestSpark.spark
+    val spec = MapReduceSpec(1, Seq("x"), inputs,
+      Files.createTempDirectory("graft-warm").toString, 4, 100, "wc")
+    def job(): Unit = OutputSink.write(Engine.transform(spark, spec, WordCount), spec.outputDir)
+    job()
+    // each job forks a child session; an isolated child would get its own
+    // executor classloader and recompile every class (9 per job)
+    assert(TestSpark.classesCompiled(job()) == 0)
   }
 
   test("unknown user_id fails like the reference's null factory lookup") {

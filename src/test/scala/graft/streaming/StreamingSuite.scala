@@ -152,6 +152,15 @@ class StreamingSuite extends AnyFunSuite {
     assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
   }
 
+  test("q82: a warm drain compiles no generated classes") {
+    val (_, q82) = graft.SparkEntry.queries.find(_._1.startsWith("q82_")).get
+    def drain(): Unit = q82(spark, "/root/testdata/sf0.001").collect(): Unit
+    drain()
+    // each drain forks a child session; an isolated child would get its
+    // own executor classloader and recompile every class (25 per drain)
+    assert(TestSpark.classesCompiled(drain()) == 0)
+  }
+
   test("q86: streamed-append sliding windows finalize to exactly the batch windows") {
     val dir = "/root/testdata/sf0.001"
     val got = Events.slidingStreamFinal(spark, dir)
